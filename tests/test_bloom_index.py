@@ -1,6 +1,7 @@
 """Per-file bloom filter indexes (``Warehouse(bloom_cols=...)``) —
-Delta's bloom-filter-index analog: commit-time distributed sidecar
-build, point-lookup file skipping, the merge-prune bloom tier, and
+Delta's bloom-filter-index analog: the commit-time sidecar build
+(driver-side and distributed, word-for-word equal), point-lookup
+file skipping, the merge-prune bloom tier, and
 the governance surfaces (fold, vacuum, rename, config drift, DVs).
 
 The scale claim under test: a point probe on a key that is NOT the
@@ -259,7 +260,11 @@ def test_driver_side_xxh64_matches_spark(spark):
     IntegerType literal) must stay bit-equal to Spark's xxhash64."""
     import random
 
-    from zolo_spark.warehouse import _xxh64_bytes, _xxh64_int, _xxh64_long
+    import numpy as np
+
+    from zolo_spark.warehouse import (_xxh64_bytes, _xxh64_int,
+                                      _xxh64_int_np, _xxh64_long,
+                                      _xxh64_long_np)
 
     random.seed(11)
     longs = [0, 1, -1, 58, 2**63 - 1, -2**63] + [
@@ -289,6 +294,16 @@ def test_driver_side_xxh64_matches_spark(spark):
         for s in seeds:
             assert (_xxh64_int(s, _xxh64_bytes(v.encode("utf-8"), 42))
                     == row[f"s{i}_{s}"])
+    # the vectorized form the driver-side bloom build uses: whole
+    # columns through the numpy 8-/4-byte paths, seed rounds chained
+    # over the column of value hashes
+    for vals, h1, tag in (
+            (longs, _xxh64_long_np(np.array(longs, np.int64), 42), "l"),
+            (ints, _xxh64_int_np(np.array(ints, np.int32), 42), "i")):
+        for s in seeds:
+            got = _xxh64_int_np(s, h1).view(np.int64).tolist()
+            assert got == [row[f"{tag}{i}_{s}"]
+                           for i in range(len(vals))]
 
 
 def test_probe_positions_type_mismatch_routes_spark_side(spark, tmp_path):
@@ -321,3 +336,84 @@ def test_probe_positions_type_mismatch_routes_spark_side(spark, tmp_path):
     expected = row.first()
     for i in range(len(pairs)):
         assert got[i] == list(expected[f"_e{i}"]), pairs[i]
+
+
+# ---- driver-side vs distributed bloom build (the selection rule)
+
+_LONG_EDGES = [-2**63, 2**63 - 1, -1, 0, 1, -123456789012, None]
+_STR_EDGES = ["o'k", "it''s", "Grüße-鍵-✓", "", "back\\slash", "x" * 40,
+              None]
+
+
+def _sidecar_rows(wh, table, entry) -> set:
+    import os
+
+    import pyarrow.parquet as pq
+
+    rows = set()
+    for rel in entry["sidecar"]:
+        t = pq.read_table(os.path.join(wh.path(table), rel))
+        rows.update(zip(*(t.column(c).to_pylist()
+                          for c in ("_fi", "_ci", "_w", "_v"))))
+    return rows
+
+
+@pytest.mark.parametrize("table,cols", [
+    ("cdc_mirror", ["cust_id", "segment"]),
+    ("items", ["zolo_id", "product_name"]),
+])
+def test_driver_bloom_build_matches_spark_build(spark, tmp_path, table,
+                                                cols):
+    """The commit-path bloom build on the driver (pyarrow + numpy
+    XXH64) must write exactly the (_fi, _ci, _w, _v) words the
+    distributed Spark build writes for the same staged files — long
+    (8-byte path), int (4-byte path) and string keys, with NULLs,
+    Long/Int MIN/MAX, negatives, quotes and non-ASCII values, over
+    two files per commit."""
+    import os
+
+    from zolo_spark import schemas
+
+    wh = _wh(spark, tmp_path, bloom_cols={table: cols})
+    if table == "cdc_mirror":
+        data = [(v, s, 1.0) for v in _LONG_EDGES for s in _STR_EDGES] \
+            + [(i * 7919 - 500, f"c{i}", 0.5) for i in range(300)]
+    else:
+        ints = [-2**31, 2**31 - 1, -1, 0, None]
+        data = [(s, "v", z, "sq", "qb", "sh", "cat", "whole", 1.0, 1)
+                for z in ints for s in _STR_EDGES] \
+            + [(f"k{i}", "v", i - 150, "sq", "qb", "sh", "cat", "whole",
+                float(i), 1) for i in range(300)]
+    df = spark.createDataFrame(data, schemas.WAREHOUSE_TABLES[table])
+    wh.commit_tx({table: df.repartition(2)})
+    (entry,) = wh._bloom_entries(wh._all_txs(wh._read_txlog()), table)
+    assert len(entry["files"]) == 2 and entry["cols"] == sorted(cols)
+    driver = _sidecar_rows(wh, table, entry)
+    pschema = wh._physical_schema(wh._tx_fields(table))
+    out = os.path.join(wh.path(table), "batch-bloom-spark")
+    wh._bloom_words_spark(table, entry["files"], entry["cols"], pschema,
+                          out)
+    spark_rows = _sidecar_rows(
+        wh, table, {"sidecar": [os.path.join("batch-bloom-spark", fn)
+                                for fn in os.listdir(out)
+                                if fn.endswith(".parquet")]})
+    assert driver == spark_rows and len(driver) > 100
+
+
+def test_large_commit_takes_distributed_bloom_build(spark, tmp_path,
+                                                    monkeypatch):
+    """Past _DRIVER_SIDECAR_MAX_ROWS (forced to 0 here) the commit
+    runs the Spark build, and lookups prune the same way on it."""
+    import zolo_spark.warehouse as W
+
+    monkeypatch.setattr(W, "_DRIVER_SIDECAR_MAX_ROWS", 0)
+    called = []
+    orig = W.Warehouse._bloom_words_spark
+    monkeypatch.setattr(W.Warehouse, "_bloom_words_spark",
+                        lambda self, *a: called.append(1) or orig(self, *a))
+    wh = _wh(spark, tmp_path)
+    _commit_residues(wh, _base(spark, n=400), mod=4)
+    assert len(called) == 4
+    got = wh.point_lookup("cdc_mirror", {"cust_id": 201}).collect()
+    assert [r["cust_id"] for r in got] == [201]
+    assert wh.last_point_lookup[0] < 4

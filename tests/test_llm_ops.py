@@ -1584,6 +1584,37 @@ def test_generational_cache_release(spark):
     assert not (live_ids() & (gen1 | gen2 | grew | emb2))
 
 
+def test_cachereg_begin_checks_each_session_cache():
+    """A scope tracking frames of two sessions must not skip the
+    second session's unpersists because the FIRST frame's session has
+    an empty cache manager (the check is per session)."""
+    from zolo_spark.llm import cachereg
+
+    class Session:
+        def __init__(self, empty):
+            cm = type("CM", (), {"isEmpty": lambda self: empty})()
+            state = type("St", (), {"cacheManager": lambda self: cm})()
+            self._jsparkSession = type(
+                "J", (), {"sharedState": lambda self: state})()
+
+    class Frame:
+        def __init__(self, session):
+            self.sparkSession, self.freed = session, False
+
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            self.freed = True
+
+    cleared, live = Session(empty=True), Session(empty=False)
+    frames = [Frame(cleared), Frame(live), Frame(cleared), Frame(live)]
+    for f in frames:
+        cachereg.persist(f, "two-sessions")
+    cachereg.begin("two-sessions")
+    assert [f.freed for f in frames] == [False, True, False, True]
+
+
 def test_incremental_dedup_digest_mode_equivalent(spark):
     """Round-8 (r7 VERDICT #7): class_key="digest" (one md5 per
     shingle) must produce the same pairs as the default chain key,

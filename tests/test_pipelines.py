@@ -1047,8 +1047,8 @@ def test_read_between_on_tx_table_prunes_and_isolates(spark, wh):
     wh.commit_tx({"square_trans": hdr("p1", "2018-03-01 13:00:00")})
     wh.commit_tx({"square_trans": hdr("p2", "2019-07-01 13:00:00")})
     # a staged-but-uncommitted batch (crash leftover) in the window
-    stray = wh._stage_batch(hdr("p3", "2018-03-02 13:00:00"),
-                            "square_trans")
+    _, stray = wh._stage_batch(hdr("p3", "2018-03-02 13:00:00"),
+                               "square_trans")
     assert stray  # exists on disk, referenced by no tx
 
     got = {r["payment_id"] for r in wh.read_between(

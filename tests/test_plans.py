@@ -653,29 +653,58 @@ def test_interval_join_is_equi_join_not_nested_loop(spark):
         or ("BroadcastHashJoin" in p)
 
 
-def test_mor_read_is_broadcast_anti_filter_no_base_shuffle(spark, tmp_path):
-    """A merge-on-read table's read applies each deletion vector as a
-    BROADCAST join — the base table must never shuffle for DV
-    application."""
+def _mor_items(spark, tmp_path):
+    """An items table with a live DV stack on TWO key sets: two mor
+    merges on product_name, one on zolo_id."""
     from zolo_spark import schemas
     from zolo_spark.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"), auto_compact_dvs=None)
     wh.init()
-    rows = spark.createDataFrame(
-        [(f"k{i}", "v", i, "sq", "qb", "sh", "cat", "whole",
-          float(i), 1) for i in range(100)],
-        schemas.WAREHOUSE_TABLES["items"])
-    wh.commit_tx({"items": rows})
-    upd = spark.createDataFrame(
-        [("k5", "v", 5, "sq", "qb", "sh", "cat", "whole", 500.0, 1)],
-        schemas.WAREHOUSE_TABLES["items"])
-    wh.merge_tx("items", upd, ["product_name"], mode="mor")
+
+    def rows(*ids):
+        return spark.createDataFrame(
+            [(f"k{i}", "v", i, "sq", "qb", "sh", "cat", "whole",
+              float(i), 1) for i in ids],
+            schemas.WAREHOUSE_TABLES["items"])
+
+    wh.commit_tx({"items": rows(*range(100))})
+    wh.merge_tx("items", rows(5), ["product_name"], mode="mor")
+    wh.merge_tx("items", rows(7, 8), ["product_name"], mode="mor")
+    wh.merge_tx("items", rows(9), ["zolo_id"], mode="mor")
+    return wh
+
+
+def test_mor_read_small_dv_stack_is_pushed_filter_no_join(spark, tmp_path):
+    """An update-batch-sized DV stack resolves at plan time: each
+    drop-set group of segments is one parquet relation with a pushed
+    NOT IN filter — no join, no exchange of any kind, so a mor read
+    runs one Spark job however many DVs are live."""
+    p = plan_of(_mor_items(spark, tmp_path).read_committed_tx("items"))
+    assert "Join" not in p and "Exchange" not in p
+    assert re.search(r"PushedFilters: \[Or\(IsNull\(product_name\),"
+                     r"Not\(In\(product_name, \[k5,k7,k8\]\)\)\)", p)
+    # four segments, four drop sets: a segment survives its own DV,
+    # so the last merge's postimage reads unfiltered and the other
+    # three each carry the zolo_id DV
+    assert p.count("Or(IsNull(zolo_id),Not(EqualTo(zolo_id,9)))") == 3
+
+
+def test_mor_read_large_dv_stack_one_anti_join_per_key_set(
+        spark, tmp_path, monkeypatch):
+    """Past the driver-side limit (forced to 0) the DVs apply as ONE
+    broadcast left-anti join per distinct key set, each against the
+    stacked key lists scoped by commit version — never one join per
+    DV, and the base table never shuffles."""
+    import zolo_spark.warehouse as W
+
+    wh = _mor_items(spark, tmp_path)
+    monkeypatch.setattr(W, "_DRIVER_SIDECAR_MAX_ROWS", 0)
     p = plan_of(wh.read_committed_tx("items"))
-    assert "BroadcastHashJoin" in p
-    # the only shuffle is the DV side's update-batch-sized DISTINCT
-    # feeding the broadcast; the base table itself never exchanges
-    assert n_shuffles(p) <= 1
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", p)) == 2
+    assert len(re.findall(r"Join type: LeftAnti", p)) == 2
+    assert n_shuffles(p) == 0
+    assert wh.read_committed_tx("items").count() == 100
 
 
 def test_row_level_op_scan_pushes_predicate(spark, tmp_path):

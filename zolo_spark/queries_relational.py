@@ -2453,7 +2453,9 @@ def tx_bloom_point_lookup(spark, sf_dir):
     case min/max stats can't serve: the customer dimension lands in
     4 residue-class commits (cust_id ≡ i mod 4, one full-domain file
     each, so envelope pruning keeps nothing), each commit building
-    its bloom sidecar in one distributed job. Five keys are probed
+    its bloom sidecar (on the driver at this batch size; in one
+    distributed job past ``_DRIVER_SIDECAR_MAX_ROWS`` — the same
+    words either way). Five keys are probed
     as point lookups — the gate ASSERTS each probe skipped files
     (at graded scales it reads 1 of 4; the assert is `< total` so
     the gate stays valid at rehearsal scales where the fixed-width

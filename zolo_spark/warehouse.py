@@ -22,8 +22,10 @@ import re
 import shutil
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (ByteType, IntegerType, LongType, ShortType,
+                               StringType, StructType)
 from pyspark.errors import AnalysisException
 
 from . import schemas
@@ -53,6 +55,60 @@ _BUCKETED = {
 # storage where a 100 TB table has 10^5 files. Callers can extend or
 # disable via the ``stats_cols`` constructor arg.
 _DEFAULT_STATS_COLS = {t: [k] for t, k in _BUCKETED.items()}
+
+# Small tx sidecars — a commit's bloom index, the live deletion
+# vectors' key lists — resolve on the DRIVER (pyarrow + numpy, no
+# Spark job) when every key column has one of these types and the
+# rows involved (staged-file footers for the bloom build, DV key
+# lists for reads) number at most _DRIVER_SIDECAR_MAX_ROWS. Past it
+# the distributed paths run. Measured crossovers against them on a
+# 4-vCPU box: long-key bloom build well past 80k rows, string-key
+# bloom build ~35k (one Python hash per value), DV NOT IN filter
+# ~10k keys (SQL-text parse); at 20k the DV filter costs about one
+# Spark job more than the broadcast anti-join and both builds still
+# win, so 20k keeps every path within one job of its best.
+_DRIVER_SIDECAR_MAX_ROWS = 20_000
+_DRIVER_KEY_TYPES = (LongType, IntegerType, ShortType, ByteType, StringType)
+# Spark SQL literal suffix per integral type: the IN list's literals
+# then carry the column's own type (no widening cast on the column)
+_INT_SQL_SUFFIX = {LongType: "L", IntegerType: "", ShortType: "S",
+                   ByteType: "Y"}
+_INT_BITS = {LongType: 63, IntegerType: 31, ShortType: 15, ByteType: 7}
+
+
+def _exact_key_value(v, dt) -> bool:
+    """True when Python value ``v`` IS a value of Spark type ``dt``
+    (integral in range, or str for strings) — only then does
+    driver-side hashing or set membership agree with the Spark-side
+    ``lit(v).cast(dt)``: a coercing int(v)/str(v) diverges (str(True)
+    = 'True' vs Spark 'true'; ``bool`` is an int subclass, so the
+    ``type(v) is`` tests exclude it)."""
+    if isinstance(dt, StringType):
+        return type(v) is str
+    bits = _INT_BITS.get(type(dt))
+    return (type(v) is int and bits is not None
+            and -(1 << bits) <= v < (1 << bits))
+
+
+def _sql_literal(v, dt) -> str:
+    """Spark SQL text literal of ``v`` typed as ``dt`` (integral or
+    string): one parsed expression instead of a py4j call per
+    literal."""
+    if isinstance(dt, StringType):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return f"{int(v)}{_INT_SQL_SUFFIX[type(dt)]}"
+
+
+def _in_sql(col: str, values, dt, negate: bool = False) -> str:
+    """``col IN (...)`` as SQL text over the sorted ``values``; with
+    ``negate``, the DV keep-filter ``col IS NULL OR NOT col IN (...)``
+    (a NULL key never equals a DV key, so it is never dropped)."""
+    q = f"`{col.replace('`', '``')}`"
+    lits = ", ".join(_sql_literal(v, dt) for v in sorted(values))
+    if negate:
+        return f"({q} IS NULL OR NOT {q} IN ({lits}))"
+    return f"{q} IN ({lits})"
+
 
 # --- driver-side xxhash64 (XXH64, Collet's published spec; the port
 # mirrors Spark's catalyst XXH64 so bloom point-lookup probes hash
@@ -154,6 +210,55 @@ def _xxh64_bytes(data: bytes, seed: int) -> int:
     return _signed64(_xxfmix(h))
 
 
+# numpy forms of the 8- and 4-byte paths: same arithmetic on uint64
+# lanes (numpy integer arrays wrap mod 2^64, the port's ``& _M64``).
+# ``v`` and ``seed`` broadcast, so one call hashes a whole key column
+# or chains one seed round over a column of hashes.
+_U = np.uint64
+
+
+def _rotl64_np(x, r: int):
+    return (x << _U(r)) | (x >> _U(64 - r))
+
+
+def _xxfmix_np(h):
+    h = h ^ (h >> _U(33))
+    h = h * _U(_XXP2)
+    h = h ^ (h >> _U(29))
+    h = h * _U(_XXP3)
+    return h ^ (h >> _U(32))
+
+
+def _xxh64_long_np(v, seed):
+    """Vectorized :func:`_xxh64_long` over int64 values; returns the
+    hashes as uint64 (``.view(np.int64)`` gives Spark's signed long)."""
+    with np.errstate(over="ignore"):
+        h = np.asarray(seed).astype(np.uint64) + _U((_XXP5 + 8) & _M64)
+        k1 = _rotl64_np(np.asarray(v).astype(np.int64).view(np.uint64)
+                        * _U(_XXP2), 31) * _U(_XXP1)
+        h = _rotl64_np(h ^ k1, 27) * _U(_XXP1) + _U(_XXP4)
+        return _xxfmix_np(h)
+
+
+def _xxh64_int_np(v, seed):
+    """Vectorized :func:`_xxh64_int` (the 4-byte path); uint64 out."""
+    with np.errstate(over="ignore"):
+        h = np.asarray(seed).astype(np.uint64) + _U((_XXP5 + 4) & _M64)
+        h = h ^ (np.asarray(v).astype(np.int64).astype(np.uint32)
+                 .astype(np.uint64) * _U(_XXP1))
+        h = _rotl64_np(h, 23) * _U(_XXP2) + _U(_XXP3)
+        return _xxfmix_np(h)
+
+
+def _bloom_positions_np(h1, k: int, m: int) -> np.ndarray:
+    """Bloom bit positions of values whose seed-42 hash is ``h1``
+    (uint64): ``pmod(xxhash64(value, lit(s)), m)`` for ``s < k`` —
+    Spark chains the value's hash in as the seed of the IntegerType
+    literal ``s``. Returns a flat int64 array of ``k·len(h1)``."""
+    return np.concatenate([_xxh64_int_np(s, h1).view(np.int64) % m
+                           for s in range(k)])
+
+
 class ConcurrentWriteError(RuntimeError):
     """A REWRITE (merge / compact / restore) was built from a snapshot
     another writer has since changed — committing it would silently
@@ -193,12 +298,15 @@ class Warehouse:
         ``merge_tx(mode="mor")`` leaves a table with ≥ N live
         deletion vectors, the table is compacted (DVs materialized,
         one right-sized batch) in the same call — Databricks'
-        auto-compaction for DV tables. Every read pays one broadcast
-        join per live DV (measured +0.4–0.5 s each at the 6M-row
-        rehearsal scale, BASELINE.md round 12), so N trades merge
-        latency against read amplification; the default 6 sits in
-        the measured 4–8 sweet spot. ``None`` disables — DVs then
-        accumulate until an explicit :meth:`compact`.
+        auto-compaction for DV tables. An update-batch-sized DV stack
+        costs a read no Spark job (its key lists become pushed
+        ``NOT IN`` filters at plan time, :meth:`_read_with_dvs`), but
+        every live DV still splits the read into more filtered
+        relations, and a large stack is one broadcast anti-join per
+        key set — so N trades merge latency against read
+        amplification; the default 6 sits in the measured 4–8 sweet
+        spot. ``None`` disables — DVs then accumulate until an
+        explicit :meth:`compact`.
 
         ``stats_cols={"table": ["key", ...]}`` opts a table into
         Delta-style per-file column stats IN THE TX LOG: every
@@ -219,12 +327,15 @@ class Warehouse:
         key that is NOT the clustering column has near-full-domain
         min/max on every file, so stats pruning keeps nothing, while a
         per-file bloom proves "key definitely not in this file" and
-        skips it. Every commit of an opted table computes, in ONE
-        distributed job per table (never collected to the driver), a
+        skips it. Every commit of an opted table computes a
         per-(file, column) bloom bitmap over the staged batch and
         writes it as a parquet SIDECAR next to the data (Delta stores
         its bloom indexes in index files the same way — the bitmaps
-        are far too large for the JSON log at real file sizes). The
+        are far too large for the JSON log at real file sizes): on
+        the driver with no Spark job for update-batch-sized commits
+        of integral/string keys, else in ONE distributed job per
+        table that never collects to the driver
+        (:meth:`_index_staged_blooms`). The
         sidecars feed :meth:`point_lookup` and refine
         :meth:`merge_tx`'s file pruning; files without an index (or
         indexed under a different ``bloom_bits``/``bloom_hashes``
@@ -232,9 +343,10 @@ class Warehouse:
         ~10 bits per distinct key for a ~1% false-positive rate — the
         default 2^20 bits (128 KiB/file/column) serves files of up to
         ~10^5 keys; at 128 MB files of ~10^6 rows pass ``bloom_bits=
-        1 << 23``. Off by default: the index job adds one scan of the
-        staged batch to every commit, a price only point-lookup /
-        CDC-merge workloads should pay."""
+        1 << 23``. Off by default: the index adds one read of the
+        staged batch to every commit (a Spark job above the driver-
+        side size), a price only point-lookup / CDC-merge workloads
+        should pay."""
         self.spark = spark
         self.root = root
         self.bucketed = bucketed
@@ -860,8 +972,6 @@ class Warehouse:
         (:meth:`create_branch`): invisible to main readers until
         :meth:`fast_forward` publishes the lineage — Iceberg's
         write-audit-publish onto a branch."""
-        import uuid
-
         for table in frames:
             if self._has_manifest(table):
                 raise ValueError(
@@ -885,12 +995,7 @@ class Warehouse:
                 # evolved cluster spec (set_clustering), falling back
                 # to the static default
                 df = df.sortWithinPartitions(*c_cols)
-            batch_dir = f"batch-{uuid.uuid4().hex}"
-            out = os.path.join(self.path(table), batch_dir)
-            df.write.mode("overwrite").parquet(out)
-            staged[table] = sorted(
-                os.path.join(batch_dir, fn) for fn in os.listdir(out)
-                if fn.endswith(".parquet"))
+            _, staged[table] = self._stage_batch(df, table)
         validated = {
             table: (self._validate_staged(table, staged[table],
                                           fields_of[table], lineage),
@@ -1205,10 +1310,15 @@ class Warehouse:
             pred = e if pred is None else pred & e
         dvs = self._replay_dvs(txs, table, as_of_version)
         if dvs:
+            # exact-typed probe values narrow the DV drop sets: the
+            # read keeps only segments that can hold a visible match
+            probe = {ph: values[ln] for ln, ph, dt in fields
+                     if ln in values and _exact_key_value(values[ln], dt)}
             df = self._to_logical(
                 self._read_with_dvs(table, txs,
                                     self._physical_schema(fields),
-                                    dvs, as_of_version, only=cand),
+                                    dvs, as_of_version, only=cand,
+                                    probe=probe),
                 fields)
         else:
             df = self._to_logical(
@@ -1224,9 +1334,10 @@ class Warehouse:
         """The committed files a point probe can't skip: min/max
         containment per column (all-NULL column or out-of-range value
         ⇒ skip; unusable stats or incomparable types ⇒ candidate),
-        then the bloom tier for indexed keys — one tiny Spark job for
-        the probe's hash positions, then driver-side bit tests
-        against the cached sidecars."""
+        then the bloom tier for indexed keys — the probe's hash
+        positions (driver-side for exact-typed integral/string probes,
+        else one tiny Spark job), then driver-side bit tests against
+        the sidecar words read with pyarrow."""
         keys = list(values)
         stats = self._file_key_stats(table, files, keys)
         cand = []
@@ -1410,21 +1521,36 @@ class Warehouse:
 
     def _read_with_dvs(self, table: str, txs, schema, dvs,
                        as_of_version: int | None,
-                       only: list[str] | None = None) -> DataFrame:
+                       only: list[str] | None = None,
+                       probe: dict | None = None) -> DataFrame:
         """Merge-on-read: the committed files minus every live
-        deletion vector's matching keys. Each file segment reads
-        tagged with its COMMIT VERSION ``_fv``; a DV at version v
-        deletes matching rows only where ``_fv < v`` (a merge's own
-        postimage batch commits AT v, so it survives its own DV; a
-        later merge's DV supersedes earlier postimages). Each DV is a
-        key-list parquet, update-batch-sized, applied as one BROADCAST
-        left join + filter — the read never shuffles the base table.
-        The segment count is bounded by the retained record count
-        (checkpoints fold history; compaction collapses to one
-        segment and clears the DVs). ``only`` restricts the read to a
-        committed-file subset (the row-level ops' pruned rewrite path)
-        — each file still reads under its own commit version so the
-        DVs apply exactly as they would on the full read."""
+        deletion vector's matching keys. Each file segment carries its
+        COMMIT VERSION ``_fv``; a DV at version v deletes matching
+        rows only where ``_fv < v`` (a merge's own postimage batch
+        commits AT v, so it survives its own DV; a later merge's DV
+        supersedes earlier postimages). The segment count is bounded
+        by the retained record count (checkpoints fold history;
+        compaction collapses to one segment and clears the DVs).
+        ``only`` restricts the read to a committed-file subset (the
+        row-level ops' pruned rewrite path) — each file still reads
+        under its own commit version so the DVs apply exactly as they
+        would on the full read.
+
+        Update-batch-sized DV stacks (:meth:`_dv_key_sets`) resolve at
+        PLAN time: each segment's drop set is the union of the DVs
+        with ``v > _fv``; segments sharing a drop set share one
+        parquet relation with one pushed literal filter
+        ``k IS NULL OR NOT k IN (...)`` — zero extra Spark jobs
+        however many DVs are live. ``probe`` (``{pcol: value}``, a
+        point lookup's exact-typed equality values) intersects the
+        drop sets with the probe: a segment whose drop set holds the
+        value is skipped outright, the others read unfiltered.
+
+        Larger or composite-key stacks stay distributed: ONE
+        broadcast ``left_anti`` join per distinct DV key set against
+        the stacked key lists (:meth:`_stacked_dv_keys`), condition
+        ``keys equal AND _fv < _dvv`` — the base table never
+        shuffles."""
         root = self.path(table)
         segs = self._replay_file_versions(txs, table, as_of_version)
         if only is not None:
@@ -1432,34 +1558,155 @@ class Warehouse:
             segs = [(v, [rel for rel in fl if rel in want])
                     for v, fl in segs]
             segs = [(v, fl) for v, fl in segs if fl]
-        df = None
-        for v, fl in segs:
-            part = (self.spark.read.schema(schema)
-                    .parquet(*[os.path.join(root, rel) for rel in fl])
-                    .withColumn("_fv", F.lit(v)))
-            df = part if df is None else df.unionByName(part)
-        if df is None:   # `only` selected no committed file
+        key_sets = self._dv_key_sets(table, dvs, schema)
+        if key_sets is not None:
+            df = None
+            for drops, fl in self._dv_drop_groups(segs, key_sets,
+                                                  probe):
+                part = (self.spark.read.schema(schema)
+                        .parquet(*[os.path.join(root, rel)
+                                   for rel in fl]))
+                if drops:
+                    part = part.filter(F.expr(" AND ".join(
+                        _in_sql(c, vals, schema[c].dataType, negate=True)
+                        for c, vals in drops)))
+                df = part if df is None else df.unionByName(part)
+            if df is None:   # no segment can hold a visible row
+                df = self.spark.createDataFrame([], schema)
+            return df
+        # ONE relation over every segment, each row's commit version
+        # looked up from its file's batch dir (a live batch dir belongs
+        # to exactly one segment): over a union of per-segment
+        # relations Catalyst pushes each anti join below the union,
+        # one join per segment
+        pairs = {(os.path.basename(os.path.dirname(rel)), v)
+                 for v, fl in segs for rel in fl}
+        dir_v = dict(pairs)
+        if not segs:   # `only` selected no committed file
             df = (self.spark.createDataFrame([], schema)
                   .withColumn("_fv", F.lit(0)))
+        elif (len(dir_v) == len(pairs)
+              and all(d.startswith("batch-") for d in dir_v)):
+            fv = ", ".join(f"{_sql_literal(d, StringType())}, {v}"
+                           for d, v in dir_v.items())
+            df = (self.spark.read.schema(schema)
+                  .parquet(*[os.path.join(root, rel)
+                             for _, fl in segs for rel in fl])
+                  .withColumn("_fv", F.expr(
+                      f"element_at(map({fv}), substring_index("
+                      "substring_index(_metadata.file_path, '/', -2), "
+                      "'/', 1))")))
+        else:   # a dir spanning two segments: the per-segment union
+            df = None
+            for v, fl in segs:
+                part = (self.spark.read.schema(schema)
+                        .parquet(*[os.path.join(root, rel)
+                                   for rel in fl])
+                        .withColumn("_fv", F.lit(v)))
+                df = part if df is None else df.unionByName(part)
+        for keys, entries in self._dvs_by_keys(dvs).items():
+            dvk = self._stacked_dv_keys(table, keys, entries, schema)
+            df = df.join(F.broadcast(dvk), self._dv_match(keys),
+                         "left_anti")
+        return df.drop("_fv")
+
+    def _dv_key_sets(self, table: str, dvs, schema
+                     ) -> list[tuple[int, str, set]] | None:
+        """The live DVs as driver-side key sets ``[(v_dv, pcol,
+        keys)]`` (NULL keys dropped: join equality never matches
+        them), read with pyarrow — or ``None`` when the stack is
+        outside the driver-side rule: a composite key, a key type
+        other than integral/string, or more than
+        ``_DRIVER_SIDECAR_MAX_ROWS`` key rows by the DV footers."""
+        import pyarrow.parquet as pq
+
+        if not dvs or not all(
+                len(keys) == 1 and keys[0] in schema.fieldNames()
+                and isinstance(schema[keys[0]].dataType,
+                               _DRIVER_KEY_TYPES)
+                for _, keys, _ in dvs):
+            return None
+        if (sum(self._staged_rows(table, fl) for _, _, fl in dvs)
+                > _DRIVER_SIDECAR_MAX_ROWS):
+            return None
+        root = self.path(table)
+        out = []
+        for v_dv, (c,), fl in dvs:
+            vals: set = set()
+            for rel in fl:
+                vals.update(pq.read_table(os.path.join(root, rel),
+                                          columns=[c])
+                            .column(c).to_pylist())
+            vals.discard(None)
+            out.append((v_dv, c, vals))
+        return out
+
+    @staticmethod
+    def _dv_drop_groups(segs, key_sets, probe: dict | None = None
+                        ) -> list[tuple[tuple, list[str]]]:
+        """Group file segments by their DV drop set: ``[(drops,
+        files)]`` where ``drops`` is ``((pcol, frozenset(keys)), ...)``
+        — the union of every DV with ``v_dv > _fv`` per key column
+        (empty tuple: nothing to drop). With a ``probe``, a probed
+        column's drop set narrows to the probe value: a segment that
+        drops it can hold no visible matching row and is left out; a
+        segment that does not needs no filter on that column."""
+        groups: dict[tuple, list[str]] = {}
+        for fv, fl in segs:
+            drops: dict[str, set] = {}
+            for v_dv, c, vals in key_sets:
+                if fv < v_dv:
+                    drops.setdefault(c, set()).update(vals)
+            if probe and any(probe[c] in vals for c, vals
+                             in drops.items() if c in probe):
+                continue
+            key = tuple(sorted((c, frozenset(vals))
+                               for c, vals in drops.items()
+                               if vals and not (probe and c in probe)))
+            groups.setdefault(key, []).extend(fl)
+        return list(groups.items())
+
+    @staticmethod
+    def _dvs_by_keys(dvs) -> dict[tuple, list[tuple[int, list[str]]]]:
+        """Live DVs grouped by key columns: ``{keys: [(v_dv, files)]}``."""
+        by_keys: dict[tuple, list] = {}
         for v_dv, keys, dv_files in dvs:
-            # explicit key schema (projected from the table's physical
-            # schema): a schemaless read runs one footer-inference job
-            # per DV per read — measured ~0.35 s each on the row-level
-            # twins, pure driver latency the key types already answer
-            dv_schema = StructType(
-                [schema[k] for k in keys if k in schema.fieldNames()])
+            by_keys.setdefault(tuple(keys), []).append((v_dv, dv_files))
+        return by_keys
+
+    def _stacked_dv_keys(self, table: str, keys: tuple, entries,
+                         schema) -> DataFrame:
+        """One key set's DV key lists stacked into one frame: the key
+        columns renamed ``_dk0..`` (so a join against the base table
+        is unambiguous) plus each DV's version ``_dvv``. Reads carry
+        the key schema explicitly: a schemaless read runs one
+        footer-inference job per DV (measured ~0.35 s each)."""
+        root = self.path(table)
+        dv_schema = StructType(
+            [schema[k] for k in keys if k in schema.fieldNames()])
+        dvk = None
+        for v_dv, dv_files in entries:
             reader = self.spark.read
             if len(dv_schema) == len(keys):
                 reader = reader.schema(dv_schema)
-            dvk = (reader
-                   .parquet(*[os.path.join(root, rel) for rel in dv_files])
-                   .select(*keys).distinct()
-                   .withColumn("_dvhit", F.lit(True)))
-            df = (df.join(F.broadcast(dvk), keys, "left")
-                  .filter(~(F.col("_dvhit").eqNullSafe(True)
-                            & (F.col("_fv") < F.lit(v_dv))))
-                  .drop("_dvhit"))
-        return df.drop("_fv")
+            part = (reader
+                    .parquet(*[os.path.join(root, rel)
+                               for rel in dv_files])
+                    .select(*[F.col(k).alias(f"_dk{i}")
+                              for i, k in enumerate(keys)],
+                            F.lit(v_dv).alias("_dvv")))
+            dvk = part if dvk is None else dvk.unionByName(part)
+        return dvk
+
+    @staticmethod
+    def _dv_match(keys: tuple):
+        """Join condition of a base row (``keys``, ``_fv``) against a
+        stacked DV row (``_dk*``, ``_dvv``): keys equal (NULL never
+        matches) and the row's file committed before the DV."""
+        cond = F.col("_fv") < F.col("_dvv")
+        for i, k in enumerate(keys):
+            cond = cond & (F.col(k) == F.col(f"_dk{i}"))
+        return cond
 
     @staticmethod
     def _resolve_timestamp(txs: list[tuple[int, dict]],
@@ -2109,7 +2356,7 @@ class Warehouse:
             c_cols = self._cluster_cols(table)
             if c_cols:
                 df = df.sortWithinPartitions(*c_cols)
-            staged[table] = self._stage_batch(df, table)
+            _, staged[table] = self._stage_batch(df, table)
         token = uuid.uuid4().hex
         pend = {"tables": staged, "watermarks": dict(watermarks or {})}
         with open(os.path.join(self.root, f"_PENDING.{token}.json"),
@@ -2346,7 +2593,7 @@ class Warehouse:
                 (F.col(ph).cast(dt) if ph in have
                  else F.lit(None).cast(dt)).alias(ph)
                 for _, ph, dt in cur_fields])
-            files = self._stage_batch(snap, table)
+            _, files = self._stage_batch(snap, table)
         self._append_tx_record({table: files}, replaces=[table],
                                expect_files=read_set)
 
@@ -2696,7 +2943,7 @@ class Warehouse:
                    .sortWithinPartitions("_zkey").drop("_zkey"))
         else:
             out = df.repartition(n)
-        new_files = self._stage_batch(
+        _, new_files = self._stage_batch(
             self._to_physical(out, self._tx_fields(table, eff)), table)
         self._append_tx_record(
             {table: keep + new_files}, replaces=[table],
@@ -2704,23 +2951,29 @@ class Warehouse:
                                   self._replay_dvs(eff, table))})
         return len(rewriting), len(new_files)
 
-    def _stage_batch(self, df: DataFrame, table: str) -> list[str]:
+    def _stage_batch(self, df: DataFrame, table: str
+                     ) -> tuple[str, list[str]]:
         """Write ``df`` under an invisible batch dir of ``table`` and
-        return the relative file list — staged, not yet committed."""
+        return ``(batch_dir, relative file list)`` — staged, not yet
+        committed. The dir comes back on its own because the list can
+        be empty (a writer that emits only ``_SUCCESS`` for an empty
+        plan), and a discarded stage must still remove it."""
         import uuid
 
         batch_dir = f"batch-{uuid.uuid4().hex}"
         out = os.path.join(self.path(table), batch_dir)
         df.write.mode("overwrite").parquet(out)
-        return sorted(
+        return batch_dir, sorted(
             os.path.join(batch_dir, fn) for fn in os.listdir(out)
             if fn.endswith(".parquet"))
 
     def _staged_rows(self, table: str, rels: list[str]) -> int:
-        """Total row count of staged files, from parquet footers
+        """Total row count of ``rels``, from parquet footers
         driver-side — the no-op checks of the row-level ops read this
         off the batch they just wrote instead of running a whole
-        ``isEmpty`` Spark job against the pre-staging plan."""
+        ``isEmpty`` Spark job against the pre-staging plan, and the
+        driver-side sidecar rule sizes bloom builds and DV stacks
+        with it."""
         import pyarrow.parquet as pq
 
         root = self.path(table)
@@ -2728,12 +2981,11 @@ class Warehouse:
             pq.ParquetFile(os.path.join(root, rel)).metadata.num_rows
             for rel in rels)
 
-    def _discard_staged(self, table: str, rels: list[str]) -> None:
-        """Remove the batch dir(s) of never-committed staged files
-        (the no-op path of a row-level op)."""
-        root = self.path(table)
-        for d in {os.path.dirname(rel) for rel in rels}:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    def _discard_staged(self, table: str, batch_dir: str) -> None:
+        """Remove a never-committed staged batch dir (the no-op path
+        of a row-level op)."""
+        shutil.rmtree(os.path.join(self.path(table), batch_dir),
+                      ignore_errors=True)
 
     # cap on distinct update-key tuples collected to the driver for
     # exact per-file pruning; above it, pruning falls back to the
@@ -2800,26 +3052,31 @@ class Warehouse:
     def _index_staged_blooms(self, tables: dict[str, list[str]]
                              ) -> dict[str, list[dict]]:
         """Build the per-file bloom index for every ``bloom_cols``
-        table in this commit: ONE distributed job per table computes,
-        for each (staged file, indexed column), the set words of a
-        ``bloom_bits``-bit / ``bloom_hashes``-hash bloom over the
-        column's non-null values, and writes them SPARSE — one
+        table in this commit: for each (staged file, indexed column),
+        the set words of a ``bloom_bits``-bit / ``bloom_hashes``-hash
+        bloom over the column's non-null values, written SPARSE — one
         ``(_fi, _ci, _w, _v)`` row per set 64-bit word, file and
         column as positional int ids — as a parquet sidecar staged
-        like any batch. Nothing is collected to the driver (at deploy
-        scale a commit can stage thousands of files; the bitmaps flow
-        executor → sidecar parquet directly). Measured cost: ~one
-        partial-aggregated pass over n·k exploded rows per commit
-        (~1.4 s for a 500k-row batch on local[32]) — the price the
-        opt-in buys point lookups with. Returns the tx-record
-        entries ``{table: [{"m", "k", "cols", "files", "sidecar"}]}``
-        where ``files``/``cols`` are the id→name mappings the
-        sidecar's ``_fi``/``_ci`` index into (so the lists must never
-        be reordered or filtered — the fold carries them verbatim).
+        like any batch. Returns the tx-record entries
+        ``{table: [{"m", "k", "cols", "files", "sidecar"}]}`` where
+        ``files``/``cols`` are the id→name mappings the sidecar's
+        ``_fi``/``_ci`` index into (so the lists must never be
+        reordered or filtered — the fold carries them verbatim).
+
+        Update-batch-sized commits (every indexed column integral or
+        string, at most ``_DRIVER_SIDECAR_MAX_ROWS`` staged rows by
+        the footers) build the words DRIVER-SIDE
+        (:meth:`_bloom_words_driver`): no Spark job on the commit
+        path. Larger or other-typed batches run ONE distributed job
+        per table (:meth:`_bloom_words_spark`) whose bitmaps flow
+        executor → sidecar parquet without touching the driver. Both
+        builds write the same rows.
 
         Files already covered by an earlier record's index (a REWRITE
         re-listing kept files) are skipped — their sidecars remain
         valid because a committed file's bytes never change."""
+        import uuid
+
         out: dict[str, list[dict]] = {}
         for t, rels in tables.items():
             cols = self.bloom_cols.get(t)
@@ -2835,70 +3092,141 @@ class Warehouse:
             new = [rel for rel in rels if rel not in covered]
             if not new:
                 continue
-            m, k = self.bloom_bits, self.bloom_hashes
-            root = self.path(t)
             pschema = self._physical_schema(fields)
             present = [c for c in pcols if c in pschema.fieldNames()]
             if not present:
                 continue
-            # Per-file INT ids via a union of single-file scans, and
-            # int column ids: the hot path (n·k exploded rows through
-            # the partial-agg exchange) carries only ints — tagging
-            # with input_file_name() and string column names measured
-            # ~2× the job cost, and the URI mapping was the fragile
-            # part. The sidecar speaks (_fi, _ci) resolved through
-            # the entry's "files"/"cols" lists. Reads carry the known
-            # key schema explicitly: no footer-inference job per
-            # staged file, and a kept file from before an add-column
-            # (missing the physical column) reads as all-NULL, so its
-            # bloom is legitimately empty for that column — the same
-            # semantics the old per-file column check spelled out.
-            read_schema = StructType([pschema[c] for c in present])
-            df = None
-            for fi, rel in enumerate(new):
-                part = (self.spark.read.schema(read_schema)
-                        .parquet(os.path.join(root, rel))
-                        .select(F.lit(fi).alias("_fi"), *present))
-                df = part if df is None else df.unionByName(part)
-            probes = [F.struct(
-                F.lit(ci).alias("_ci"),
-                F.when(F.col(c).isNotNull(),
-                       F.pmod(F.xxhash64(F.col(c), F.lit(s)),
-                              F.lit(m))).alias("_p"))
-                for ci, c in enumerate(present) for s in range(k)]
-            # FLAT (_fi, _ci, _w, _v) rows — one row per SET word.
-            # A per-file map column would be n·k entries in one cell
-            # (measured 10× the commit cost at 500k-row batches);
-            # flat rows ride ONE partial-aggregated exchange (the
-            # map-side bit_or caps rows at words-per-file), write
-            # vectorized, and let the read side filter to just the
-            # probed word indexes.
-            words = (df
-                     .select("_fi", F.explode(F.array(*probes))
-                             .alias("e"))
-                     .filter(F.col("e._p").isNotNull())
-                     .select("_fi", F.col("e._ci").alias("_ci"),
-                             # 64-bit words: half the rows of 32-bit
-                             (F.col("e._p") / 64).cast("int")
-                             .alias("_w"),
-                             # SQL expr: the Python shiftleft binding
-                             # only takes a literal shift count
-                             F.expr("shiftleft(1L, "
-                                    "cast(e._p % 64 as int))")
-                             .alias("_b"))
-                     .groupBy("_fi", "_ci", "_w")
-                     .agg(F.bit_or("_b").alias("_v")))
-            import uuid
             side_dir = f"batch-bloom-{uuid.uuid4().hex}"
-            words.write.mode("overwrite").parquet(
-                os.path.join(root, side_dir))
+            out_dir = os.path.join(self.path(t), side_dir)
+            if (all(isinstance(pschema[c].dataType, _DRIVER_KEY_TYPES)
+                    for c in present)
+                    and self._staged_rows(t, new)
+                    <= _DRIVER_SIDECAR_MAX_ROWS):
+                self._bloom_words_driver(t, new, present, pschema,
+                                         out_dir)
+            else:
+                self._bloom_words_spark(t, new, present, pschema,
+                                        out_dir)
             sidecar = sorted(
-                os.path.join(side_dir, fn)
-                for fn in os.listdir(os.path.join(root, side_dir))
+                os.path.join(side_dir, fn) for fn in os.listdir(out_dir)
                 if fn.endswith(".parquet"))
-            out[t] = [{"m": m, "k": k, "cols": present,
-                       "files": new, "sidecar": sidecar}]
+            out[t] = [{"m": self.bloom_bits, "k": self.bloom_hashes,
+                       "cols": present, "files": new,
+                       "sidecar": sidecar}]
         return out
+
+    def _bloom_words_driver(self, table: str, new: list[str],
+                            present: list[str], pschema,
+                            out_dir: str) -> None:
+        """The sparse bloom words of ``new`` × ``present``, built with
+        pyarrow + numpy and written as one parquet file under
+        ``out_dir``. Integral keys hash through the vectorized XXH64
+        port (4-byte path below long, as catalyst widens them);
+        strings hash their UTF-8 bytes once per value through
+        :func:`_xxh64_bytes`; the k seed rounds are vectorized either
+        way. Positions sorted by word and OR-reduced per word give
+        exactly the non-zero words the Spark ``bit_or`` build writes.
+        A file lacking a column (staged before its add) reads as
+        all-NULL: no words, as in the Spark build."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        m, k = self.bloom_bits, self.bloom_hashes
+        fis, cis, ws, vs = [], [], [], []
+        for fi, rel in enumerate(new):
+            pf = pq.ParquetFile(os.path.join(self.path(table), rel))
+            have = set(pf.schema_arrow.names)
+            tbl = pf.read(columns=[c for c in present if c in have])
+            for ci, c in enumerate(present):
+                if c not in have:
+                    continue
+                col = tbl.column(c).drop_null()
+                if len(col) == 0:
+                    continue
+                dt = pschema[c].dataType
+                if isinstance(dt, StringType):
+                    h1 = np.array([_xxh64_bytes(v.encode("utf-8"), 42)
+                                   & _M64 for v in col.to_pylist()],
+                                  dtype=np.uint64)
+                elif isinstance(dt, LongType):
+                    h1 = _xxh64_long_np(col.to_numpy(), 42)
+                else:
+                    h1 = _xxh64_int_np(col.to_numpy(), 42)
+                # sparse word build — sort the positions by word and
+                # OR each run's bits: memory stays O(n·k), never a
+                # dense bloom_bits bitmap per (file, column)
+                pos = np.sort(_bloom_positions_np(h1, k, m))
+                w = pos >> 6
+                starts = np.flatnonzero(
+                    np.concatenate(([True], w[1:] != w[:-1])))
+                bits = np.left_shift(_U(1), (pos & 63).astype(np.uint64))
+                fis.append(np.full(len(starts), fi, dtype=np.int32))
+                cis.append(np.full(len(starts), ci, dtype=np.int32))
+                ws.append(w[starts].astype(np.int32))
+                vs.append(np.bitwise_or.reduceat(bits, starts)
+                          .view(np.int64))
+
+        def cat(parts, dtype):
+            return (np.concatenate(parts) if parts
+                    else np.zeros(0, dtype=dtype))
+
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(pa.table({
+            "_fi": cat(fis, np.int32), "_ci": cat(cis, np.int32),
+            "_w": cat(ws, np.int32), "_v": cat(vs, np.int64)}),
+            os.path.join(out_dir, "part-00000.parquet"))
+
+    def _bloom_words_spark(self, table: str, new: list[str],
+                           present: list[str], pschema,
+                           out_dir: str) -> None:
+        """The distributed bloom build: ONE job computes the sparse
+        words of ``new`` × ``present`` and writes them under
+        ``out_dir``; nothing is collected to the driver (at deploy
+        scale a commit can stage thousands of files). Measured cost:
+        ~one partial-aggregated pass over n·k exploded rows (~1.4 s
+        for a 500k-row batch on local[32])."""
+        m, k = self.bloom_bits, self.bloom_hashes
+        root = self.path(table)
+        # Per-file INT ids via a union of single-file scans, and int
+        # column ids: the hot path (n·k exploded rows through the
+        # partial-agg exchange) carries only ints — tagging with
+        # input_file_name() and string column names measured ~2× the
+        # job cost. Reads carry the known key schema explicitly: no
+        # footer-inference job per staged file, and a kept file from
+        # before an add-column (missing the physical column) reads as
+        # all-NULL, so its bloom is legitimately empty for that column.
+        read_schema = StructType([pschema[c] for c in present])
+        df = None
+        for fi, rel in enumerate(new):
+            part = (self.spark.read.schema(read_schema)
+                    .parquet(os.path.join(root, rel))
+                    .select(F.lit(fi).alias("_fi"), *present))
+            df = part if df is None else df.unionByName(part)
+        probes = [F.struct(
+            F.lit(ci).alias("_ci"),
+            F.when(F.col(c).isNotNull(),
+                   F.pmod(F.xxhash64(F.col(c), F.lit(s)),
+                          F.lit(m))).alias("_p"))
+            for ci, c in enumerate(present) for s in range(k)]
+        # FLAT (_fi, _ci, _w, _v) rows — one row per SET word. A
+        # per-file map column would be n·k entries in one cell
+        # (measured 10× the commit cost at 500k-row batches); flat
+        # rows ride ONE partial-aggregated exchange (the map-side
+        # bit_or caps rows at words-per-file), write vectorized, and
+        # let the read side filter to just the probed word indexes.
+        words = (df
+                 .select("_fi", F.explode(F.array(*probes)).alias("e"))
+                 .filter(F.col("e._p").isNotNull())
+                 .select("_fi", F.col("e._ci").alias("_ci"),
+                         # 64-bit words: half the rows of 32-bit
+                         (F.col("e._p") / 64).cast("int").alias("_w"),
+                         # SQL expr: the Python shiftleft binding only
+                         # takes a literal shift count
+                         F.expr("shiftleft(1L, cast(e._p % 64 as int))")
+                         .alias("_b"))
+                 .groupBy("_fi", "_ci", "_w")
+                 .agg(F.bit_or("_b").alias("_v")))
+        words.write.mode("overwrite").parquet(out_dir)
 
     @staticmethod
     def _bloom_entries(txs: list[tuple[int, dict]],
@@ -2969,9 +3297,6 @@ class Warehouse:
         is definitionally bit-exact. ``pairs`` is
         ``[(value, DataType)]``; each value is hashed at its table
         column's type because ``xxhash64`` is type-sensitive."""
-        from pyspark.sql.types import (ByteType, IntegerType, LongType,
-                                       ShortType, StringType)
-
         m, k = self.bloom_bits, self.bloom_hashes
         out: list = [None] * len(pairs)
         spark_side = []
@@ -2980,36 +3305,25 @@ class Warehouse:
             # at its fixed default seed 42: the value's hash becomes
             # the seed for hashing the IntegerType literal ``s``.
             # The fast path is taken ONLY when the Python type matches
-            # the column type exactly (type(v) is int/str — note bool
-            # is an int subclass, so ``type is`` excludes it): a
-            # coercing int(v)/str(v) would diverge from the Spark-side
-            # ``F.lit(v).cast(dt)`` the index build used (str(True) =
-            # 'True' vs Spark 'true'; str(1e-07) = '1e-07' vs
-            # '1.0E-7'; int('5.8') raises), and a divergent hash makes
-            # the bloom silently prune files that DO contain the rows.
-            # Everything else routes to the Spark fallback, which is
-            # bit-exact by construction.
-            # Range guard mirrors ANSI cast bounds: the Python
-            # routines mask-wrap where Spark's cast would raise, so an
-            # out-of-range probe must take the Spark path too.
-            _rng = {LongType: 63, IntegerType: 31,
-                    ShortType: 15, ByteType: 7}.get(type(dt))
-            _in_rng = (type(v) is int and _rng is not None
-                       and -(1 << _rng) <= v < (1 << _rng))
-            if _in_rng and isinstance(dt, LongType):
+            # the column type exactly (_exact_key_value): a divergent
+            # hash makes the bloom silently prune files that DO
+            # contain the rows. Everything else — including
+            # out-of-range ints, where the Python routines mask-wrap
+            # but Spark's ANSI cast raises — routes to the Spark
+            # fallback, which is bit-exact by construction.
+            if not _exact_key_value(v, dt):
+                spark_side.append(i)
+            elif isinstance(dt, LongType):
                 out[i] = [_xxh64_int(s, _xxh64_long(v, 42)) % m
                           for s in range(k)]
-            elif _in_rng and isinstance(
-                    dt, (IntegerType, ShortType, ByteType)):
-                # sub-long integrals hash through the 4-byte path
-                out[i] = [_xxh64_int(s, _xxh64_int(v, 42)) % m
-                          for s in range(k)]
-            elif type(v) is str and isinstance(dt, StringType):
+            elif isinstance(dt, StringType):
                 out[i] = [_xxh64_int(
                     s, _xxh64_bytes(v.encode("utf-8"), 42)) % m
                     for s in range(k)]
             else:
-                spark_side.append(i)
+                # sub-long integrals hash through the 4-byte path
+                out[i] = [_xxh64_int(s, _xxh64_int(v, 42)) % m
+                          for s in range(k)]
         if spark_side:
             row = self.spark.range(1).select(*[
                 F.array(*[F.pmod(
@@ -3198,8 +3512,11 @@ class Warehouse:
         Iceberg merge-on-read / Hudi MOR): the merge writes ONLY the
         postimage batch plus a key-list deletion vector — zero data
         files rewritten, commit cost O(update batch) regardless of how
-        many files the keys touch. Readers apply the DV as a broadcast
-        anti-filter (:meth:`_read_with_dvs`); :meth:`compact` (or a
+        many files the keys touch. Readers apply the DV as a pushed
+        ``NOT IN`` filter while the stack is update-batch-sized, else
+        as a broadcast anti-join (:meth:`_read_with_dvs`); a bloom-
+        indexed table indexes the postimage on the driver, so a small
+        mor merge runs no index job. :meth:`compact` (or a
         later cow-mode merge) materializes the DVs away. Choose mor
         for update-heavy hot tables between compactions, cow for
         read-heavy ones — the read result is bit-identical either
@@ -3254,11 +3571,11 @@ class Warehouse:
             # pruning that runs when a later merge materializes
             data = self._to_physical(data, fields) \
                 .sortWithinPartitions(*[p_of[k] for k in keys])
-            new_files = self._stage_batch(data, table)
+            _, new_files = self._stage_batch(data, table)
             # the postimage batch honors CHECK constraints (the DV
             # sidecar is metadata, not rows — exempt)
             cons = self._validate_staged(table, new_files, fields, txs)
-            dv_files = self._stage_batch(dv_df, table)
+            _, dv_files = self._stage_batch(dv_df, table)
             self._append_tx_record({table: new_files},
                                    dv={table: dv_files},
                                    dv_keys={table: [p_of[k]
@@ -3314,7 +3631,7 @@ class Warehouse:
         # shuffle; commit_tx does the same for the _dt slice column)
         merged = self._to_physical(merged, fields) \
             .sortWithinPartitions(*[p_of[k] for k in keys])
-        new_files = self._stage_batch(merged, table)
+        _, new_files = self._stage_batch(merged, table)
         cons = self._validate_staged(table, new_files, fields, txs)
         self._append_tx_record({table: keep + new_files},
                                replaces=[table],
@@ -3375,13 +3692,19 @@ class Warehouse:
                            rels: list[str]) -> set:
         """The subset of committed files ``rels`` holding ≥1 row
         hidden by a live deletion vector — the files a REWRITE record
-        must materialize before it may clear the DVs. One
-        column-pruned scan per distinct DV key set (reads ONLY the
-        key columns), broadcast-joined against the stacked DV key
-        lists with each file's commit version ``_fv`` scoped per DV
-        (``_fv < v_dv``), returning file NAMES only — never a shuffle
-        of the base table, same scale shape as
-        :meth:`_touched_by_predicate`."""
+        must materialize before it may clear the DVs. ONE
+        column-pruned scan (reads ONLY the key columns) returning
+        file NAMES — never a shuffle of the base table, same scale
+        shape as :meth:`_touched_by_predicate`.
+
+        Driver-side key sets (:meth:`_dv_key_sets`) make it a filter:
+        each drop-set group of segments keeps rows with
+        ``k IN (drop set)``, which parquet pushdown evaluates against
+        row-group min/max (the DV envelope) — no extra job. Otherwise
+        each DV key set is a broadcast inner join against its stacked
+        key lists scoped ``_fv < _dvv``, prefiltered by the stack's
+        per-column min/max envelope (one tiny agg job) so key-
+        clustered DVs (the CDC norm) cost O(affected files)."""
         if not dvs or not rels:
             return set()
         root = self.path(table)
@@ -3392,64 +3715,61 @@ class Warehouse:
         if not segs:
             return set()
         pschema = self._physical_schema(fields)
-        by_keys: dict[tuple, list] = {}
-        for v_dv, keys, dv_files in dvs:
-            by_keys.setdefault(tuple(keys), []).append((v_dv, dv_files))
-        uri_of = {rel: self._file_uri(os.path.join(root, rel))
-                  for rel in want}
-        affected: set = set()
-        for keys, entries in by_keys.items():
-            # explicit key schema: skip the per-DV footer-inference
-            # job (same as the _read_with_dvs read path)
-            dv_schema = StructType(
-                [pschema[k] for k in keys
-                 if k in pschema.fieldNames()])
-            dvk = None
-            for v_dv, dv_files in entries:
-                reader = self.spark.read
-                if len(dv_schema) == len(keys):
-                    reader = reader.schema(dv_schema)
-                part = (reader
-                        .parquet(*[os.path.join(root, rel)
-                                   for rel in dv_files])
-                        .select(*keys)
-                        .withColumn("_dvv", F.lit(v_dv)))
-                dvk = part if dvk is None else dvk.unionByName(part)
-            # envelope prefilter: only rows inside the stacked DV
-            # keys' per-column min/max can survive the equality join,
-            # and the filter sits BEFORE the nondeterministic
-            # input_file_name tag, so it pushes into the scan as
-            # row-group skipping — key-clustered DVs (the CDC norm)
-            # cost O(affected files), not a full key-column scan
-            row = dvk.agg(*[f for k in keys
-                            for f in (F.min(k).alias(f"_lo_{k}"),
-                                      F.max(k).alias(f"_hi_{k}"))]
-                          ).collect()[0]
-            env = None
-            for k in keys:
-                lo, hi = row[f"_lo_{k}"], row[f"_hi_{k}"]
-                if lo is None:
-                    continue   # all-NULL key column: no row joins
-                c = (F.col(k) >= F.lit(lo)) & (F.col(k) <= F.lit(hi))
-                env = c if env is None else env & c
-            raw = None
-            for v, fl in segs:
-                part = (self.spark.read.schema(pschema)
-                        .parquet(*[os.path.join(root, rel)
-                                   for rel in fl])
-                        .select(*keys))
-                if env is not None:
-                    part = part.filter(env)
-                part = (part
-                        .withColumn("_f", F.input_file_name())
-                        .withColumn("_fv", F.lit(v)))
-                raw = part if raw is None else raw.unionByName(part)
-            hits = {r["_f"] for r in
-                    raw.join(F.broadcast(dvk), list(keys), "inner")
-                    .filter(F.col("_fv") < F.col("_dvv"))
-                    .select("_f").distinct().collect()}
-            affected.update(rel for rel in want if uri_of[rel] in hits)
-        return affected
+
+        def scan(fl: list[str], cols) -> DataFrame:
+            return (self.spark.read.schema(pschema)
+                    .parquet(*[os.path.join(root, rel) for rel in fl])
+                    .select(*cols))
+
+        raws = []
+        key_sets = self._dv_key_sets(table, dvs, pschema)
+        if key_sets is not None:
+            for drops, fl in self._dv_drop_groups(segs, key_sets):
+                if drops:
+                    raws.append(
+                        scan(fl, [c for c, _ in drops])
+                        .filter(F.expr(" OR ".join(
+                            _in_sql(c, vals, pschema[c].dataType)
+                            for c, vals in drops)))
+                        .select(F.input_file_name().alias("_f")))
+        else:
+            for keys, entries in self._dvs_by_keys(dvs).items():
+                dvk = self._stacked_dv_keys(table, keys, entries,
+                                            pschema)
+                # envelope prefilter BEFORE the nondeterministic
+                # input_file_name tag, so it pushes into the scan as
+                # row-group skipping
+                row = dvk.agg(*[f for i in range(len(keys))
+                                for f in (F.min(f"_dk{i}").alias(f"_lo{i}"),
+                                          F.max(f"_dk{i}").alias(f"_hi{i}"))]
+                              ).collect()[0]
+                env = None
+                for i, k in enumerate(keys):
+                    lo, hi = row[f"_lo{i}"], row[f"_hi{i}"]
+                    if lo is None:
+                        continue   # all-NULL key column: no row joins
+                    c = (F.col(k) >= F.lit(lo)) & (F.col(k) <= F.lit(hi))
+                    env = c if env is None else env & c
+                raw = None
+                for v, fl in segs:
+                    part = scan(fl, list(keys))
+                    if env is not None:
+                        part = part.filter(env)
+                    part = (part
+                            .withColumn("_f", F.input_file_name())
+                            .withColumn("_fv", F.lit(v)))
+                    raw = part if raw is None else raw.unionByName(part)
+                raws.append(raw.join(F.broadcast(dvk),
+                                     self._dv_match(keys), "inner")
+                            .select("_f"))
+        if not raws:
+            return set()
+        hits_df = raws[0]
+        for r in raws[1:]:
+            hits_df = hits_df.unionByName(r)
+        hits = {r["_f"] for r in hits_df.distinct().collect()}
+        return {rel for rel in want
+                if self._file_uri(os.path.join(root, rel)) in hits}
 
     def delete_tx(self, table: str, condition: str,
                   keys: list[str] | None = None,
@@ -3493,13 +3813,13 @@ class Warehouse:
                        .filter(F.expr(condition))
                        .select(*[F.col(k).alias(p_of[k]) for k in keys])
                        .distinct())
-            dv_files = self._stage_batch(matched, table)
+            dv_dir, dv_files = self._stage_batch(matched, table)
             if self._staged_rows(table, dv_files) == 0:
                 # no match: no-op, matching the cow contract (an empty
                 # DV sidecar would cost every later read a dead
                 # anti-join and count toward auto_compact_dvs) — the
                 # check reads the staged footers, not an isEmpty job
-                self._discard_staged(table, dv_files)
+                self._discard_staged(table, dv_dir)
                 return
             self._append_tx_record({table: []},
                                    dv={table: dv_files},
@@ -3542,7 +3862,7 @@ class Warehouse:
         c_cols = self._cluster_cols(table, txs)
         if c_cols:
             staged = staged.sortWithinPartitions(*c_cols)
-        new_files = self._stage_batch(staged, table)
+        _, new_files = self._stage_batch(staged, table)
         cons = self._validate_staged(table, new_files, fields, txs)
         self._append_tx_record({table: keep + new_files},
                                replaces=[table],
@@ -3605,16 +3925,16 @@ class Warehouse:
                 .localCheckpoint()   # one evaluation: DV == postimage
             post = self._to_physical(apply_set(matched, True), fields) \
                 .sortWithinPartitions(*[p_of[k] for k in keys])
-            new_files = self._stage_batch(post, table)
+            post_dir, new_files = self._stage_batch(post, table)
             if self._staged_rows(table, new_files) == 0:
                 # no match: no-op, matching the cow contract — read
                 # off the staged footers, not a separate isEmpty job
-                self._discard_staged(table, new_files)
+                self._discard_staged(table, post_dir)
                 return
             dv_df = matched.select(
                 *[F.col(k).alias(p_of[k]) for k in keys]).distinct()
             cons = self._validate_staged(table, new_files, fields, txs)
-            dv_files = self._stage_batch(dv_df, table)
+            _, dv_files = self._stage_batch(dv_df, table)
             self._append_tx_record({table: new_files},
                                    dv={table: dv_files},
                                    dv_keys={table: [p_of[k]
@@ -3653,7 +3973,7 @@ class Warehouse:
         c_cols = self._cluster_cols(table, txs)
         if c_cols:
             staged = staged.sortWithinPartitions(*c_cols)
-        new_files = self._stage_batch(staged, table)
+        _, new_files = self._stage_batch(staged, table)
         cons = self._validate_staged(table, new_files, fields, txs)
         self._append_tx_record({table: keep + new_files},
                                replaces=[table],
